@@ -35,6 +35,7 @@ import tempfile
 import time
 import uuid
 import dataclasses
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from . import logcodec
@@ -159,16 +160,22 @@ class ConstraintViolationError(RuntimeError):
 
 
 class CommitConflictError(RuntimeError):
-    """Another writer published this commit version first. ``append``
-    retries automatically (blind appends never semantically conflict);
-    ``merge``/``delete``/``update`` rebase-retry when the conflicting
-    commits provably commute — no overlap with the rewritten files,
-    schema unchanged, and the concurrently-ADDED files contain no row
-    the operation would have affected (Delta VLDB'20 §3.2 semantics);
-    ``compact`` rebases over any pure file-add. Only genuinely
-    conflicting writes surface — their read was stale, the caller must
-    re-run. ``overwrite`` always surfaces (a full replace has no
-    meaningful rebase)."""
+    """Another writer published this commit version first, and the
+    winning commits do not commute with this one — its read was stale,
+    the caller must re-run. Every writer commits through
+    ``VersionedTable._commit``, which re-reads the fresh snapshot and
+    rebases (Delta VLDB'20 §3.2) when the op's ``Commute`` row holds:
+    its own txn replay already landed (a no-op), or the schema, the
+    identity high-water and the deletion vectors it depends on are
+    unchanged, every file it rewrote is still live, and the
+    concurrently-ADDED files pass its probe (merge: no row matches its
+    keys, none at all under NOT MATCHED BY SOURCE; delete/update/
+    ``overwrite(replace_where=)``: no row matches the predicate).
+    ``append`` rebases over anything but a schema change,
+    ``upgrade_protocol`` over anything, ``compact``/``reorg_purge``
+    over anything that keeps their inputs and the vectors. Full
+    ``overwrite``, ``restore``, DDL and the DataSource writers have no
+    row: they always surface."""
 
 
 class UnsupportedTableFeatureError(RuntimeError):
@@ -672,6 +679,294 @@ def latest_version_in(log_dir: str) -> int:
     return max(versions)
 
 
+# -- the commit record: one builder for every writer of the log (the
+# native table and both DataSource writers) -- pure local JSON, no
+# SparkSession -----------------------------------------------------------
+
+_IDENTITY_PROP = "versioned.identityColumns"
+
+
+def _sidecar(path: str, name: str):
+    """A table's JSON sidecar (constraints, generated columns, DEFAULTs,
+    properties, partitioning); ``{}`` when absent."""
+    try:
+        with open(os.path.join(path, name)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return {}
+
+
+def _identity_specs(path: str) -> dict[str, dict]:
+    """{column: {"start", "step", "mode"}} of declared identity columns."""
+    raw = _sidecar(path, "_properties.json").get(_IDENTITY_PROP)
+    return json.loads(raw) if raw else {}
+
+
+def required_writer_features(path: str) -> set[str]:
+    """Writer features the table's declared invariants demand: a writer
+    unaware of them would commit rows falsifying a CHECK / NOT NULL
+    constraint, NULL generated or defaulted columns, or reissue
+    identity ids."""
+    cons = _sidecar(path, "_constraints.json")
+    wf = set()
+    if cons:
+        wf.add("check_constraints")
+    if any(k.startswith("notnull:") for k in cons):
+        wf.add("not_null_constraints")
+    if _sidecar(path, "_generated.json"):
+        wf.add("generated_columns")
+    if _identity_specs(path):
+        wf.add("identity_columns")
+    if _sidecar(path, "_defaults.json"):
+        wf.add("column_defaults")
+    return wf
+
+
+def _raw_record(path: str, version: int) -> dict:
+    """One commit record as stored — possibly delta-encoded (see
+    ``logcodec``); scalar keys (schema, ts, protocol, scalar stats) are
+    always whole."""
+    with open(os.path.join(path, "_log", f"{version:020d}.json")) as f:
+        return json.loads(f.read())
+
+
+def _materialized(path: str, version: int) -> dict:
+    """The commit record with full file lists, resolved through the
+    parent chain (bounded by the checkpoint cadence)."""
+    return logcodec.materialize(
+        _raw_record(path, version), lambda v: _materialized(path, v)
+    )
+
+
+def _next_protocol(
+    path: str, commit: Commit, prev_protocol: dict | None, widens: bool
+) -> dict | None:
+    """The protocol this commit must carry: predecessor's features
+    (monotone — a feature once required never un-requires; restore
+    and rebase keep it) ∪ a preset on the commit itself (clone
+    carries the source's) ∪ what the commit's CONTENT demands:
+    deletion vectors present → a DV-unaware reader would resurrect
+    deleted rows; a rename/drop commit → files must be read by
+    parquet field id, not name; a widened column (``widen_column``,
+    or ``widens``: schema evolution adopted a wider type) leaves
+    NARROW pages under a WIDE schema, which a reader trusting footer
+    types would misread (Delta's typeWidening); declared invariants →
+    ``required_writer_features``. Returns None (no protocol stamped)
+    while nothing beyond plain cumulative file lists is in play."""
+    rf: set[str] = set()
+    wf: set[str] = set()
+    for p in (prev_protocol, commit.protocol):
+        if p:
+            rf |= set(p.get("reader_features") or [])
+            wf |= set(p.get("writer_features") or [])
+    if commit.dv_files:
+        rf.add("deletion_vectors")
+    if commit.op in ("rename_column", "drop_column"):
+        rf.add("column_mapping")
+    if commit.op == "widen_column" or widens:
+        rf.add("type_widening")
+    wf |= required_writer_features(path)
+    # every reader feature is implicitly a writer feature: a writer
+    # republishes the snapshot, so it must understand them all
+    wf |= rf
+    if not rf and not wf:
+        return None
+    return {
+        "min_reader": 2 if rf else 1,
+        "min_writer": 2,
+        "reader_features": sorted(rf),
+        "writer_features": sorted(wf),
+    }
+
+
+def prepare_commit(path: str, commit: Commit) -> None:
+    """Stamp ``commit`` in place against its on-disk predecessor — the
+    record builder every writer publishes through:
+
+    * protocol gate: refuse to build on a predecessor whose features
+      this engine can't maintain; then stamp the predecessor's
+      features ∪ what this commit newly requires (``_next_protocol``);
+    * monotone in-commit timestamps (Delta inCommitTimestamps):
+      ``max(now, prev_ts + 1ms)``, so TIMESTAMP AS OF stays well-defined
+      when a fleet's writer clocks skew;
+    * the field-id high-water (schema ids ∨ carried ∨ predecessor's):
+      a dropped column's id is never reissued;
+    * the identity high-water survives EVERY commit kind and never
+      regresses (a RESTORE must not reissue ids of restored-away rows):
+      per column, farther-along-the-step-direction wins;
+    * no vectors → no live DV counts;
+    * the COPY INTO registry fold at checkpoint versions."""
+    m = max(
+        _max_field_id(T.StructType.fromJson(json.loads(commit.schema_json))),
+        int(commit.stats.get("max_field_id", 0)),
+    )
+    prev_raw: dict = {}
+    if commit.version > 0:
+        try:
+            prev_raw = _raw_record(path, commit.version - 1)
+        except FileNotFoundError:
+            pass
+        check_write_protocol(prev_raw, where=f"{path}: ")
+        prev_stats = prev_raw.get("stats") or {}
+        m = max(m, int(prev_stats.get("max_field_id", 0)))
+        commit.ts = max(commit.ts, float(prev_raw.get("ts", 0.0)) + 1e-3)
+        prev_ident = prev_stats.get("identity") or {}
+        if prev_ident:
+            cur = dict(commit.stats.get("identity") or {})
+            specs = _identity_specs(path)
+            for c, v in prev_ident.items():
+                if c in cur:
+                    step = int(specs.get(c, {}).get("step", 1))
+                    cur[c] = (
+                        max(int(cur[c]), int(v))
+                        if step >= 0
+                        else min(int(cur[c]), int(v))
+                    )
+                else:
+                    cur[c] = int(v)
+            commit.stats["identity"] = cur
+    if m:
+        commit.stats["max_field_id"] = m
+    if not commit.dv_files:
+        commit.stats.pop("dv_counts", None)
+    # checkpoint versions fold the COPY INTO loaded-file registry
+    # forward: the commit carries the UNION of every loaded identity
+    # at-or-below it, so _copy_into_loaded walks only commits since the
+    # last checkpoint instead of full history. Stamped even when empty —
+    # the stamp is the walk's stop marker, so a stray carried copy at a
+    # non-checkpoint version is dropped. The fold itself stops at the
+    # previous stamp: O(CHECKPOINT_EVERY) amortized.
+    if commit.version % logcodec.CHECKPOINT_EVERY:
+        commit.stats.pop("copy_into_registry", None)
+    elif commit.version > 0:
+        reg = set((commit.stats.get("copy_into") or {}).get("loaded") or [])
+        v = commit.version - 1
+        while v >= 0:
+            st = _raw_record(path, v).get("stats") or {}
+            reg.update((st.get("copy_into") or {}).get("loaded") or [])
+            prior = st.get("copy_into_registry")
+            if prior is not None:
+                reg.update(prior)
+                break
+            v -= 1
+        commit.stats["copy_into_registry"] = sorted(reg)
+    # widening vs the PREDECESSOR schema, not just the widen_column op:
+    # append/merge/copy_into schema evolution leaves the same narrow
+    # pages under a wide schema
+    widens = False
+    prev_sj = prev_raw.get("schema_json")
+    if prev_sj and prev_sj != commit.schema_json:
+        prev_by = {
+            f.name: f.dataType
+            for f in T.StructType.fromJson(json.loads(prev_sj)).fields
+        }
+        widens = any(
+            f.name in prev_by
+            and prev_by[f.name] != f.dataType
+            and widened_type(prev_by[f.name], f.dataType) == f.dataType
+            for f in T.StructType.fromJson(json.loads(commit.schema_json)).fields
+        )
+    commit.protocol = _next_protocol(
+        path, commit, prev_raw.get("protocol"), widens
+    )
+
+
+def publish_commit(path: str, commit: Commit) -> dict | None:
+    """Build ``commit``'s record (``prepare_commit``), delta-encode it
+    against its materialized parent and publish it put-if-absent — a
+    lost race raises ``CommitConflictError``. Returns the parent record
+    (None at checkpoint versions, which store full lists)."""
+    prepare_commit(path, commit)
+    parent = None
+    if commit.version > 0 and commit.version % logcodec.CHECKPOINT_EVERY:
+        try:
+            parent = _materialized(path, commit.version - 1)
+        except FileNotFoundError:
+            parent = None
+    record = dict(commit.__dict__)
+    if record.get("protocol") is None:
+        # base-protocol tables keep the pre-gate JSON shape — old logs
+        # and new plain tables are byte-compatible
+        record.pop("protocol", None)
+    payload = logcodec.encode(record, parent)
+    publish_commit_file(
+        os.path.join(path, "_log"), commit.version, json.dumps(payload)
+    )
+    return parent
+
+
+@dataclass(frozen=True)
+class Commute:
+    """One op's row of the commute table: when a commit that lost its
+    version slot may be rebuilt on the fresh snapshot and re-published
+    (serialization "the winners first, this op second", Delta VLDB'20
+    §3.2). ``conflict`` checks the rows against the (prev, fresh)
+    snapshot pair; the first failing one surfaces as
+    ``CommitConflictError``. ``what`` names the op in those messages."""
+
+    what: str
+    # (app, version): a replay of this op's own writer transaction
+    # that already landed makes this attempt a no-op
+    txn: tuple[str | None, int | None] = (None, None)
+    # the rewrite's column set was planned against prev's schema
+    same_schema: bool = False
+    # ids this op assigned may collide with a concurrent allocation
+    same_identity: bool = False
+    # positions / CDF images were computed against prev's vectors
+    same_dv: bool = False
+    # files this op rewrote or depends on: a concurrent removal is a
+    # write-write conflict (lost update)
+    guarded: frozenset = frozenset()
+    # any concurrently added file is stale input (NOT MATCHED BY SOURCE:
+    # its rows would be unmatched-by-source in a serial execution)
+    refuse_added: bool = False
+    # added files → does any row fall in this op's scope?
+    probe: Callable[[list[str]], bool] | None = None
+    probe_what: str = ""
+    # called with the fresh snapshot before the rebuild (append shifts
+    # its already-written identity values past the fresh high-water)
+    rebase: Callable[[Commit], None] | None = None
+
+    def conflict(self, prev: Commit, fresh: Commit) -> str | None:
+        """Why the commits between ``prev`` (this op's read) and
+        ``fresh`` do NOT commute with this op — None when a rebase is
+        exact. The added-files probe scans only the
+        concurrent delta, never the table."""
+        what = self.what
+        if self.same_schema and fresh.schema_json != prev.schema_json:
+            return f"concurrent schema change during {what} — re-run"
+        if self.same_identity and (fresh.stats.get("identity") or {}) != (
+            prev.stats.get("identity") or {}
+        ):
+            return f"concurrent identity allocation during {what} — re-run"
+        if self.same_dv and list(fresh.dv_files) != list(prev.dv_files):
+            return (
+                f"concurrent deletion-vector commit during {what} — re-run "
+                "on the fresh snapshot"
+            )
+        gone = self.guarded - set(fresh.files)
+        if gone:
+            return (
+                f"concurrent writer removed file(s) this {what} rewrote "
+                f"({sorted(gone)[:3]}…) — write-write conflict, re-run "
+                f"{what} on the fresh snapshot"
+            )
+        prev_files = set(prev.files)
+        added = [f for f in fresh.files if f not in prev_files]
+        if added and self.refuse_added:
+            return (
+                f"concurrent commit added files during a {what} with a "
+                "NOT MATCHED BY SOURCE clause — re-run"
+            )
+        if added and self.probe is not None and self.probe(added):
+            return (
+                f"concurrent commit added rows matching this "
+                f"{self.probe_what} — result would differ from a serial "
+                "execution, re-run"
+            )
+        return None
+
+
 class VersionedTable:
     """A versioned parquet table rooted at ``path``."""
 
@@ -719,9 +1014,7 @@ class VersionedTable:
         """The commit record with full file lists — delta-encoded
         records (see ``logcodec``) resolve through the parent chain,
         bounded by the checkpoint cadence."""
-        with open(self._commit_path(version)) as f:
-            raw = json.loads(f.read())
-        return logcodec.materialize(raw, self._materialized_record)
+        return _materialized(self.path, version)
 
     def get_commit(self, version: int | None = None) -> Commit:
         v = self.latest_version() if version is None else version
@@ -770,66 +1063,6 @@ class VersionedTable:
             )
         return best
 
-    def _next_protocol(
-        self,
-        commit: Commit,
-        prev_protocol: dict | None,
-        widens: bool = False,
-    ) -> dict | None:
-        """The protocol this commit must carry: predecessor's features
-        (monotone — a feature once required never un-requires; restore
-        and rebase keep it) ∪ a preset on the commit itself (clone
-        carries the source's) ∪ what the commit's CONTENT demands:
-        deletion vectors present → a DV-unaware reader would resurrect
-        deleted rows; a rename/drop commit → files must be read by
-        parquet field id, not name; live CHECK constraints / generated
-        columns → an unaware writer would commit violating/NULL rows.
-        Returns None (no protocol stamped) while nothing beyond plain
-        cumulative file lists is in play."""
-        rf: set[str] = set()
-        wf: set[str] = set()
-        for p in (prev_protocol, commit.protocol):
-            if p:
-                rf |= set(p.get("reader_features") or [])
-                wf |= set(p.get("writer_features") or [])
-        if commit.dv_files:
-            rf.add("deletion_vectors")
-        if commit.op in ("rename_column", "drop_column"):
-            rf.add("column_mapping")
-        # a widened column leaves NARROW pages under a WIDE schema: a
-        # reader trusting parquet footer types over the commit schema
-        # would hand back int32 frames for a bigint column (Delta's
-        # typeWidening reader+writer feature, same rationale). `widens`
-        # covers the EVOLUTION path too — append/merge/copy_into whose
-        # _merged_schema adopted a wider type (op stays "append"/…)
-        # produce the same narrow-pages-under-wide-schema state
-        if commit.op == "widen_column" or widens:
-            rf.add("type_widening")
-        if self.constraints():
-            wf.add("check_constraints")
-        if self.generated_columns():
-            wf.add("generated_columns")
-        # an unaware writer would append without assigning ids /
-        # advancing the high-water (identity), or commit NULL rows a
-        # declared NOT NULL column forbids — both must refuse loudly
-        if self.identity_columns():
-            wf.add("identity_columns")
-        if self.not_null_columns():
-            wf.add("not_null_constraints")
-        if self.column_defaults():
-            wf.add("column_defaults")
-        # every reader feature is implicitly a writer feature: a writer
-        # republishes the snapshot, so it must understand them all
-        wf |= rf
-        if not rf and not wf:
-            return None
-        return {
-            "min_reader": 2 if rf else 1,
-            "min_writer": 2,
-            "reader_features": sorted(rf),
-            "writer_features": sorted(wf),
-        }
-
     def upgrade_protocol(
         self,
         reader_features: list[str] | tuple = (),
@@ -855,176 +1088,120 @@ class VersionedTable:
                 f"cannot advertise feature(s) {sorted(bad)} this engine "
                 "does not implement"
             )
-        # metadata-only: a version collision just means re-reading the
-        # fresh snapshot and re-publishing — trivially commutative
-        for attempt in range(6):
-            prev = self.get_commit()
-            try:
-                self._write_commit(
-                    Commit(
-                        prev.version + 1,
-                        "set_protocol",
-                        prev.files,
-                        [],
-                        prev.schema_json,
-                        time.time(),
-                        self._carry_stats(prev, prev.files),
-                        dv_files=list(prev.dv_files),
-                        protocol={
-                            "reader_features": sorted(reader_features),
-                            "writer_features": sorted(writer_features),
-                        },
-                    )
-                )
-                return prev.version + 1
-            except CommitConflictError:
-                if attempt == 5:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
+        # metadata-only: trivially commutes with any concurrent commit
+        return self._commit_metadata(
+            self.get_commit(),
+            "set_protocol",
+            protocol={
+                "reader_features": sorted(reader_features),
+                "writer_features": sorted(writer_features),
+            },
+            rule=Commute("set_protocol"),
+        )
 
     def _write_commit(self, commit: Commit) -> None:
-        """Atomic put-if-absent publish (see ``publish_commit_file``).
-        Every commit re-stamps the field-id high-water mark from its own
-        schema ∨ the carried value ∨ the PREDECESSOR's carried value
-        (so a hand-built stats dict — compact/purge — can never regress
-        it; a dropped column's id must never be reissued), keeping
-        ``_next_field_floor`` exact across drops."""
-        m = max(
-            _max_field_id(T.StructType.fromJson(json.loads(commit.schema_json))),
-            int(commit.stats.get("max_field_id", 0)),
-        )
-        # protocol: gate on the PREDECESSOR (may we build on it at
-        # all?), then stamp this commit with its features ∪ whatever
-        # this commit newly requires — upgrades are monotone, never
-        # dropped, so a version-v reader gate covers v's whole history.
-        prev_protocol: dict | None = None
-        if commit.version > 0:
-            try:
-                with open(self._commit_path(commit.version - 1)) as f:
-                    prev_raw = json.loads(f.read())
-            except FileNotFoundError:
-                prev_raw = {}
-            check_write_protocol(prev_raw, where=f"{self.path}: ")
-            prev_protocol = prev_raw.get("protocol")
-            m = max(
-                m, int((prev_raw.get("stats") or {}).get("max_field_id", 0))
-            )
-            # monotone in-commit timestamps (Delta inCommitTimestamps):
-            # commits stamp max(now, prev_ts + 1ms), so TIMESTAMP AS OF
-            # resolution (version_at's last-at-or-before rule) stays
-            # well-defined even when a fleet's writer clocks skew — a
-            # backdated wall clock can otherwise make version n+1
-            # "older" than n and timestamp travel non-deterministic
-            commit.ts = max(commit.ts, float(prev_raw.get("ts", 0.0)) + 1e-3)
-            # the identity high-water survives EVERY commit kind and
-            # never regresses (a RESTORE to an older version must not
-            # reissue ids of restored-away rows) — merge per column,
-            # farther-along-the-step-direction wins. Scalar stats keys
-            # are never delta-encoded, so prev_raw carries them whole.
-            prev_ident = (prev_raw.get("stats") or {}).get("identity") or {}
-            if prev_ident:
-                cur = dict(commit.stats.get("identity") or {})
-                defs = self.identity_columns()
-                for c, v in prev_ident.items():
-                    if c in cur:
-                        step = defs.get(c, (1, 1))[1]
-                        cur[c] = (
-                            max(int(cur[c]), int(v))
-                            if step >= 0
-                            else min(int(cur[c]), int(v))
-                        )
-                    else:
-                        cur[c] = int(v)
-                commit.stats["identity"] = cur
-        if m:
-            commit.stats["max_field_id"] = m
-        # no vectors -> no live DV entries: clear any carried counts so
-        # current_row_count never subtracts deletions a compact/purge
-        # already materialized
-        if not commit.dv_files:
-            commit.stats.pop("dv_counts", None)
-        # checkpoint versions fold the COPY INTO loaded-file registry
-        # forward: the commit carries the UNION of every loaded
-        # identity at-or-below it, so _copy_into_loaded walks only
-        # commits since the last checkpoint instead of full history
-        # (at NRT cadence a year-old table otherwise pays ~500k commit
-        # reads per COPY INTO). Stamped even when empty — the stamp is
-        # the stop marker. The walk reads RAW records (copy_into keys
-        # are scalar stats, never delta-encoded) and itself stops at
-        # the previous stamp, so the fold is O(CHECKPOINT_EVERY)
-        # amortized (one full walk at the first post-upgrade
-        # checkpoint of a legacy log).
-        if commit.version % logcodec.CHECKPOINT_EVERY:
-            # the stamp is the walk's stop marker: a stray carried copy
-            # at a non-checkpoint version would stop the walk with a
-            # stale union (no builder carries it today — belt/braces)
-            commit.stats.pop("copy_into_registry", None)
-        if (
-            commit.version > 0
-            and commit.version % logcodec.CHECKPOINT_EVERY == 0
-        ):
-            reg = set(
-                (commit.stats.get("copy_into") or {}).get("loaded") or []
-            )
-            v = commit.version - 1
-            while v >= 0:
-                st = self._raw_commit_stats(v)
-                ci = st.get("copy_into")
-                if ci:
-                    reg.update(ci.get("loaded") or [])
-                prior = st.get("copy_into_registry")
-                if prior is not None:
-                    reg.update(prior)
-                    break
-                v -= 1
-            commit.stats["copy_into_registry"] = sorted(reg)
-        # widening detection vs the PREDECESSOR schema (not just the
-        # widen_column op): schema-evolution widening during append/
-        # merge/copy_into must gate readers identically — old narrow
-        # pages sit under the new wide schema either way. schema_json
-        # is a scalar record key (never delta-encoded), so prev_raw
-        # carries the full predecessor schema.
-        widens = False
-        prev_sj = prev_raw.get("schema_json") if commit.version > 0 else None
-        if prev_sj and prev_sj != commit.schema_json:
-            prev_by = {
-                f.name: f.dataType
-                for f in T.StructType.fromJson(json.loads(prev_sj)).fields
-            }
-            for f in T.StructType.fromJson(
-                json.loads(commit.schema_json)
-            ).fields:
-                p = prev_by.get(f.name)
-                if (
-                    p is not None
-                    and p != f.dataType
-                    and widened_type(p, f.dataType) == f.dataType
-                ):
-                    widens = True
-                    break
-        commit.protocol = self._next_protocol(
-            commit, prev_protocol, widens=widens
-        )
-        parent: dict | None = None
-        if commit.version > 0 and commit.version % logcodec.CHECKPOINT_EVERY:
-            # checkpoint versions store full lists — don't pay the
-            # parent-chain walk for a parent encode() won't look at
-            try:
-                parent = self._materialized_record(commit.version - 1)
-            except FileNotFoundError:
-                parent = None
-        record = dict(commit.__dict__)
-        if record.get("protocol") is None:
-            # base-protocol tables keep the pre-gate JSON shape — old
-            # logs and new plain tables are byte-compatible
-            record.pop("protocol", None)
-        payload = logcodec.encode(record, parent)
-        publish_commit_file(self.log_dir, commit.version, json.dumps(payload))
+        """One publish attempt — the seam ``_commit`` retries around:
+        build and publish the record (``publish_commit``), then sync the
+        catalog registration."""
+        parent = publish_commit(self.path, commit)
         reg = self._read_registration()
         if reg is not None:
             self._sync_registration(
                 commit, reg, parent_files=parent["files"] if parent else None
             )
+
+    def _commit(
+        self,
+        prev: Commit | None,
+        build: Callable[[Commit | None], Commit],
+        rule: Commute | None = None,
+        new_files: list[str] = (),
+        retries: int = 5,
+    ) -> Commit | None:
+        """The optimistic transaction every writer commits through
+        (Delta VLDB'20 §3.2): ``build`` the commit on ``prev`` and
+        publish it; on a lost version race re-read the fresh snapshot
+        and, iff ``rule`` says the winners commute with this op
+        (``Commute.conflict``), rebuild on it and retry — immediately, at most
+        ``retries`` times (each attempt re-reads the log anyway). With
+        no ``rule`` the conflict surfaces. The rebuild re-publishes the
+        already-written files: no data is rewritten. Rebased attempts
+        carry the writer-transaction watermarks (plus ``rule.txn``) and
+        stamp ``rebased_from_version``; the footer/bloom stats of
+        ``new_files`` are harvested once per (schema, files), not per
+        attempt. Returns the published commit, or None when a replay of
+        this op's own transaction won the race."""
+        base, attempt = prev, 0
+        harvest_key, harvested = None, {}
+        while True:
+            commit = build(base)
+            st = commit.stats
+            if rule is not None:
+                if "txn" not in st and base.stats.get("txn"):
+                    st["txn"] = dict(base.stats["txn"])
+                app, ver = rule.txn
+                if app is not None:
+                    st["txn"] = {**st.get("txn", {}), app: ver}
+                if base.version != prev.version:
+                    st["rebased_from_version"] = prev.version
+            if new_files:
+                key = (commit.schema_json, tuple(new_files))
+                if key != harvest_key:
+                    harvested = self._with_new_file_stats(
+                        new_files, commit.schema_json
+                    )
+                    harvest_key = key
+                # the op's own entries (compact's exact cluster stats)
+                # overlay the footer harvest per column
+                fs = dict(st.get("file_stats") or {})
+                for f, s in harvested.items():
+                    fs[f] = {**s, **fs.get(f, {})}
+                if fs:
+                    st["file_stats"] = fs
+            try:
+                self._write_commit(commit)
+                return commit
+            except CommitConflictError:
+                attempt += 1
+                if rule is None or attempt > retries:
+                    raise
+                fresh = self.get_commit()
+                if self._txn_skip(fresh, *rule.txn):
+                    return None
+                why = rule.conflict(prev, fresh)
+                if why:
+                    raise CommitConflictError(why) from None
+                if rule.rebase is not None:
+                    rule.rebase(fresh)
+                base = fresh
+
+    def _commit_metadata(
+        self,
+        prev: Commit,
+        op: str,
+        schema_json: str | None = None,
+        extra: dict | None = None,
+        protocol: dict | None = None,
+        rule: Commute | None = None,
+    ) -> int:
+        """A metadata-only commit: the base's files and vectors under a
+        new schema / stats / protocol — nothing rewritten, no change
+        feed. Returns the new version."""
+        return self._commit(
+            prev,
+            lambda b: Commit(
+                b.version + 1,
+                op,
+                b.files,
+                [],
+                schema_json or b.schema_json,
+                time.time(),
+                self._carry_stats(b, b.files, extra),
+                dv_files=list(b.dv_files),
+                protocol=protocol,
+            ),
+            rule,
+        ).version
 
     # -- metastore registration (O5) ---------------------------------------
 
@@ -1199,11 +1376,7 @@ class VersionedTable:
         return os.path.join(self.path, "_constraints.json")
 
     def constraints(self) -> dict[str, str]:
-        try:
-            with open(self._constraints_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return _sidecar(self.path, "_constraints.json")
 
     def add_constraint(self, name: str, predicate_sql: str) -> None:
         """Declare a CHECK constraint. Like Delta, the CURRENT snapshot is
@@ -1293,20 +1466,9 @@ class VersionedTable:
                 for f in schema.fields
             ]
         )
-        v = prev.version + 1
-        self._write_commit(
-            Commit(
-                v,
-                "set_not_null",
-                prev.files,
-                [],
-                new_schema.json(),
-                time.time(),
-                self._carry_stats(prev, prev.files, {"not_null": col}),
-                dv_files=list(prev.dv_files),
-            )
+        return self._commit_metadata(
+            prev, "set_not_null", new_schema.json(), {"not_null": col}
         )
-        return v
 
     def drop_not_null(self, col: str) -> int:
         """Inverse of ``set_not_null``. Ordering matters: the
@@ -1336,18 +1498,8 @@ class VersionedTable:
                 for f in schema.fields
             ]
         )
-        v = prev.version + 1
-        self._write_commit(
-            Commit(
-                v,
-                "drop_not_null",
-                prev.files,
-                [],
-                new_schema.json(),
-                time.time(),
-                self._carry_stats(prev, prev.files, {"dropped_not_null": col}),
-                dv_files=list(prev.dv_files),
-            )
+        v = self._commit_metadata(
+            prev, "drop_not_null", new_schema.json(), {"dropped_not_null": col}
         )
         cons.pop(name)
         self._write_constraints(cons)
@@ -1368,11 +1520,7 @@ class VersionedTable:
         ``versioned.bloomFilterFpp`` — per-file bloom sidecars for
         equality skipping on unclustered columns (see
         ``pipeline/bloom.py``; Databricks' bloom index analog)."""
-        try:
-            with open(self._properties_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return _sidecar(self.path, "_properties.json")
 
     def set_properties(self, props: dict[str, str]) -> None:
         """Upsert properties. Values are stored as strings (Delta does
@@ -1718,11 +1866,7 @@ class VersionedTable:
         ``replace_where`` / ``delete`` on the partition predicate,
         which rewrite nothing outside the matching files. Declared at
         CREATE, immutable thereafter (Delta's contract)."""
-        try:
-            with open(self._partitioning_path()) as f:
-                return list(json.load(f))
-        except FileNotFoundError:
-            return []
+        return list(_sidecar(self.path, "_partitioning.json"))
 
     def _write_partitioning(self, cols: list[str]) -> None:
         fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".tmp")
@@ -1736,11 +1880,7 @@ class VersionedTable:
         return os.path.join(self.path, "_generated.json")
 
     def generated_columns(self) -> dict[str, str]:
-        try:
-            with open(self._generated_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return _sidecar(self.path, "_generated.json")
 
     def add_generated_column(self, name: str, expr_sql: str) -> None:
         """Bind an EXISTING column to a generation expression — Delta's
@@ -1828,11 +1968,7 @@ class VersionedTable:
         ``TransactionDatetime DATETIME2 DEFAULT GETUTCDATE()``
         (``/root/reference/dbrdemo.sql:23,35``); Delta's
         ``allowColumnDefaults`` writer feature."""
-        try:
-            with open(self._defaults_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return _sidecar(self.path, "_defaults.json")
 
     def set_column_default(self, name: str, expr_sql: str) -> None:
         """Declare ``DEFAULT expr_sql`` for an existing column: batches
@@ -1928,26 +2064,21 @@ class VersionedTable:
     # disjoint (never reissued), and RESTORE keeps the high-water mark so
     # ids of restored-away rows are never reused (Delta's rule).
 
-    _IDENTITY_PROP = "versioned.identityColumns"
+    _IDENTITY_PROP = _IDENTITY_PROP
 
     def identity_columns(self) -> dict[str, tuple[int, int]]:
         """{column: (start, step)} for declared identity columns."""
-        raw = self.properties().get(self._IDENTITY_PROP)
-        if not raw:
-            return {}
         return {
             c: (int(d["start"]), int(d["step"]))
-            for c, d in json.loads(raw).items()
+            for c, d in _identity_specs(self.path).items()
         }
 
     def identity_modes(self) -> dict[str, str]:
         """{column: 'always' | 'default'} — pre-mode declarations (no
         ``mode`` key in the stored spec) read as 'always'."""
-        raw = self.properties().get(self._IDENTITY_PROP)
-        if not raw:
-            return {}
         return {
-            c: d.get("mode", "always") for c, d in json.loads(raw).items()
+            c: d.get("mode", "always")
+            for c, d in _identity_specs(self.path).items()
         }
 
     def identity_high_water(self, col: str, version: int | None = None) -> int | None:
@@ -2211,19 +2342,8 @@ class VersionedTable:
         if hw is not None:
             # record the adopted high-water in a metadata-only commit so
             # the next writer's plan starts past existing values
-            self._write_commit(
-                Commit(
-                    prev.version + 1,
-                    "set_identity",
-                    prev.files,
-                    [],
-                    prev.schema_json,
-                    time.time(),
-                    self._carry_stats(
-                        prev, prev.files, {"identity": {name: hw}}
-                    ),
-                    dv_files=list(prev.dv_files),
-                )
+            self._commit_metadata(
+                prev, "set_identity", extra={"identity": {name: hw}}
             )
 
     # -- writer transactions (Delta txnAppId/txnVersion parity) ----------
@@ -2245,16 +2365,6 @@ class VersionedTable:
             raise ValueError("txn_app requires txn_version")
         seen = prev.stats.get("txn", {}).get(app)
         return seen is not None and version <= seen
-
-    @staticmethod
-    def _txn_record(
-        stats: dict, prev: Commit, app: str | None, version: int | None
-    ) -> dict:
-        if app is not None:
-            txn = dict(stats.get("txn") or prev.stats.get("txn") or {})
-            txn[app] = version
-            stats["txn"] = txn
-        return stats
 
     def _write_files(
         self,
@@ -2398,13 +2508,12 @@ class VersionedTable:
     def schema(self, version: int | None = None) -> T.StructType:
         return T.StructType.fromJson(json.loads(self.get_commit(version).schema_json))
 
-    def _with_new_file_stats(self, stats: dict, new_files: list[str], schema) -> dict:
-        """Footer-harvest min/max for the data files this commit just
-        wrote and merge them into the carried skipping stats — O(churn)
-        per commit (only NEW files are opened, footers only), so every
-        file-writing op keeps ``read_between`` pruning complete without
-        waiting for a clustered compact. ``schema`` is the commit's
-        StructType or its JSON.
+    def _with_new_file_stats(self, new_files: list[str], schema_json: str) -> dict:
+        """Footer-harvest per-file min/max for the data files a commit
+        just wrote (``_commit`` merges them into the carried skipping
+        stats) — O(churn) per commit (only NEW files are opened, footers
+        only), so every file-writing op keeps ``read_between`` pruning
+        complete without waiting for a clustered compact.
 
         When ``versioned.bloomFilterColumns`` is set, the same O(churn)
         pass digests those columns of each new file into a bloom
@@ -2415,14 +2524,8 @@ class VersionedTable:
         min/max. Enabling the property on an existing table indexes
         files as they are rewritten (run ``compact()`` to index history
         — the same contract as Delta's bloom index)."""
-        if not new_files:
-            return stats
-        if isinstance(schema, str):
-            schema = T.StructType.fromJson(json.loads(schema))
-        merged = dict(stats.get("file_stats", {}))
-        fstats = _footer_file_stats(new_files, schema)
-        for f, s in fstats.items():
-            merged[f] = {**merged.get(f, {}), **s}
+        schema = T.StructType.fromJson(json.loads(schema_json))
+        merged = _footer_file_stats(new_files, schema)
         bloom_cols = self._bloom_columns(schema)
         if bloom_cols:
             from . import bloom as _bloom
@@ -2438,11 +2541,7 @@ class VersionedTable:
             for f, side in sidecars.items():
                 key = _strip_scheme(os.path.abspath(f))
                 merged[key] = {**merged.get(key, {}), "__bloom__": side}
-        if not merged:
-            return stats
-        out = dict(stats)
-        out["file_stats"] = merged
-        return out
+        return merged
 
     def _bloom_columns(self, schema: T.StructType) -> list[str]:
         """Configured bloom columns present in this commit's schema.
@@ -2613,8 +2712,11 @@ class VersionedTable:
         fstats = _footer_file_stats(files, schema)
         if fstats and "file_stats" not in stats:
             stats["file_stats"] = fstats  # O(#files) footer harvest
-        t._write_commit(
-            Commit(0, "create", files, cdf, schema.json(), time.time(), stats)
+        t._commit(
+            None,
+            lambda _: Commit(
+                0, "create", files, cdf, schema.json(), time.time(), stats
+            ),
         )
         if identity and ident_cache is not None:
             ident_cache.unpersist()
@@ -2685,8 +2787,11 @@ class VersionedTable:
             "cdf_absent": True,
             "file_stats": _footer_file_stats(files, schema),
         }
-        t._write_commit(
-            Commit(0, "convert", files, [], schema.json(), time.time(), stats)
+        t._commit(
+            None,
+            lambda _: Commit(
+                0, "convert", files, [], schema.json(), time.time(), stats
+            ),
         )
         return t
 
@@ -2777,11 +2882,7 @@ class VersionedTable:
             )
             files = self._write_files(df, self.data_dir, schema=schema)
             old = self._snapshot(prev)  # DV-applied: don't retract twice
-            stats = self._with_new_file_stats(
-                {**self._carry_stats(prev, []), **(extra_stats or {})},
-                files,
-                schema,
-            )
+            stats = {**self._carry_stats(prev, []), **(extra_stats or {})}
             if _cdf_representable(prev_schema, schema):
                 # pre-images are ALIGNED (projected + cast losslessly)
                 # to the NEW commit schema so one commit's CDF files
@@ -2813,16 +2914,12 @@ class VersionedTable:
                 stats["cdf_schema_break"] = True
             if ident_last:
                 stats["identity"] = dict(ident_last)
-            self._write_commit(
-                Commit(
-                    v,
-                    "overwrite",
-                    files,
-                    cdf,
-                    schema.json(),
-                    time.time(),
-                    stats,
-                )
+            self._commit(
+                prev,
+                lambda b: Commit(
+                    v, "overwrite", files, cdf, schema.json(), time.time(), stats
+                ),
+                new_files=files,
             )
             if ident_cache is not None:
                 ident_cache.unpersist()
@@ -2870,7 +2967,7 @@ class VersionedTable:
             self.cdf_dir,
             schema=schema,
         )
-        ver = self._commit_cow_with_rebase(
+        ver = self._commit_cow(
             prev,
             touched,
             [f for f in files if f not in set(carryover)],
@@ -2939,8 +3036,9 @@ class VersionedTable:
             # pre-image exists; CDF continuity breaks (see overwrite)
             cdf = []
             stats["cdf_schema_break"] = True
-        self._write_commit(
-            Commit(
+        self._commit(
+            prev,
+            lambda b: Commit(
                 v,
                 "restore",
                 list(target.files),
@@ -2949,7 +3047,7 @@ class VersionedTable:
                 time.time(),
                 stats,
                 dv_files=list(target.dv_files),
-            )
+            ),
         )
         return v
 
@@ -3101,8 +3199,9 @@ class VersionedTable:
                 for f, n in src.stats["dv_counts"].items()
                 if f in file_map
             }
-        dest._write_commit(
-            Commit(
+        dest._commit(
+            None,
+            lambda _: Commit(
                 0,
                 "clone",
                 files,
@@ -3115,7 +3214,7 @@ class VersionedTable:
                 # were written under those features (field-id renames,
                 # DV sidecars), so the clone's readers need them all
                 protocol=src.protocol,
-            )
+            ),
         )
         # constraint/generation sidecars describe the CURRENT schema —
         # against an older cloned snapshot they may reference columns
@@ -3150,17 +3249,13 @@ class VersionedTable:
         (app, version) is a structural no-op — the at-least-once safety
         a scheduler-restarted ingest job needs without a dedup pass.
 
-        Concurrent writers: a blind append never semantically conflicts
-        with another commit, so a version collision (atomic put-if-
-        absent in ``_write_commit``) is resolved by re-reading the new
-        latest commit and re-publishing the SAME already-written data
-        files on top of it — no data is rewritten, only the metadata
-        record (Delta's optimistic-concurrency resolution for
-        AppendOnly ops). Retries re-check the txn watermark (another
-        attempt of this same job may have won) and stop if the schema
-        changed concurrently (that is a real conflict). Snapshot-
-        dependent writers (merge/delete/update/overwrite/compact) do
-        NOT retry — their result depends on what they read."""
+        Concurrent writers: a blind append commutes with any commit but
+        a schema change, so a lost version race rebases (``_commit``):
+        the SAME already-written data files are re-published on the
+        fresh snapshot — only the metadata record is rewritten (Delta's
+        resolution for AppendOnly ops) — after re-checking the txn
+        watermark (another attempt of this same job may have won).
+        ``retry_conflicts`` bounds the rebases."""
         prev = self.get_commit()
         if self._txn_skip(prev, txn_app, txn_version):
             return prev.version
@@ -3197,83 +3292,82 @@ class VersionedTable:
             ident_cache.unpersist()
         if explicit_cache is not None:
             explicit_cache.unpersist()
-        attempt = 0
-        while True:
-            try:
-                base_stats = self._with_new_file_stats(
-                    self._carry_stats(prev, prev.files), new_files, schema
-                )
-                if extra_stats:
-                    # caller-stamped provenance rides the commit record
-                    # itself, atomic with the data (COPY INTO's loaded-
-                    # file registry, ingest batch ids, ...)
-                    base_stats.update(extra_stats)
-                if ident_last:
-                    base_stats["identity"] = dict(ident_last)
-                self._write_commit(
-                    Commit(
-                        prev.version + 1,
-                        op,
-                        prev.files + new_files,
-                        cdf,
-                        schema.json(),
-                        time.time(),
-                        self._txn_record(base_stats, prev, txn_app, txn_version),
-                        dv_files=list(prev.dv_files),
-                    )
-                )
-                return prev.version + 1
-            except CommitConflictError:
-                attempt += 1
-                if attempt > retry_conflicts:
-                    raise
-                fresh = self.get_commit()
-                if self._txn_skip(fresh, txn_app, txn_version):
-                    return fresh.version  # our own replay won the race
-                if fresh.schema_json != prev.schema_json:
-                    raise  # concurrent schema change: a real conflict
-                if ident_last:
-                    # commit arbitration for identity: the concurrent
-                    # winner may have consumed the id range this append
-                    # assumed — shift our already-written ids past the
-                    # FRESH high-water and re-publish. This is what
-                    # makes two lockless processes mint disjoint ids.
-                    fresh_plan = self._identity_plan(fresh)
-                    shifts = {
-                        c: fresh_plan[c][0] - ident_plan[c][0]
-                        for c in ident_plan
-                        if fresh_plan[c][0] != ident_plan[c][0]
-                    }
-                    if shifts:
-                        # the same BIGINT bound _assign_identity enforces:
-                        # a rebase near the int64 edge must refuse, not
-                        # wrap into colliding/negative ids (both ends of
-                        # the shifted range — the fresh first id and the
-                        # shifted last id — must stay representable)
-                        for c, d in shifts.items():
-                            for edge in (fresh_plan[c][0], ident_last[c] + d):
-                                if not (-(1 << 63) <= edge < (1 << 63)):
-                                    raise ValueError(
-                                        f"identity rebase for column {c!r} "
-                                        f"would overflow BIGINT (shift={d}, "
-                                        f"edge value={edge})"
-                                    )
-                        new_files = self._shift_identity_files(
-                            new_files, self.data_dir, shifts, schema=schema
+
+        def build(base: Commit) -> Commit:
+            stats = self._carry_stats(base, base.files)
+            if extra_stats:
+                # caller-stamped provenance rides the commit record
+                # itself, atomic with the data (COPY INTO's loaded-
+                # file registry, ingest batch ids, ...)
+                stats.update(extra_stats)
+            if ident_last:
+                stats["identity"] = dict(ident_last)
+            return Commit(
+                base.version + 1,
+                op,
+                base.files + new_files,
+                cdf,
+                schema.json(),
+                time.time(),
+                stats,
+                dv_files=list(base.dv_files),
+            )
+
+        def shift_identity(fresh: Commit) -> None:
+            # commit arbitration for identity: the concurrent winner may
+            # have consumed the id range this append assumed — shift our
+            # already-written ids past the FRESH high-water. This is what
+            # makes two lockless processes mint disjoint ids.
+            nonlocal cdf, ident_last, ident_plan
+            if not ident_last:
+                return
+            fresh_plan = self._identity_plan(fresh)
+            shifts = {
+                c: fresh_plan[c][0] - ident_plan[c][0]
+                for c in ident_plan
+                if fresh_plan[c][0] != ident_plan[c][0]
+            }
+            if not shifts:
+                return
+            # the same BIGINT bound _assign_identity enforces: a rebase
+            # near the int64 edge must refuse, not wrap into colliding/
+            # negative ids (both ends of the shifted range — the fresh
+            # first id and the shifted last id — must stay representable)
+            for c, d in shifts.items():
+                for edge in (fresh_plan[c][0], ident_last[c] + d):
+                    if not (-(1 << 63) <= edge < (1 << 63)):
+                        raise ValueError(
+                            f"identity rebase for column {c!r} "
+                            f"would overflow BIGINT (shift={d}, "
+                            f"edge value={edge})"
                         )
-                        cdf = self._shift_identity_files(
-                            cdf, self.cdf_dir, shifts, schema=schema
-                        )
-                        ident_last = {
-                            c: ident_last[c] + shifts.get(c, 0)
-                            for c in ident_last
-                        }
-                        # advance the plan baseline ONLY for the columns
-                        # this append assigned — re-admitting an explicit
-                        # BY DEFAULT column here would make a SECOND
-                        # conflict shift the user-supplied values
-                        ident_plan = {c: fresh_plan[c] for c in ident_plan}
-                prev = fresh
+            new_files[:] = self._shift_identity_files(
+                new_files, self.data_dir, shifts, schema=schema
+            )
+            cdf = self._shift_identity_files(
+                cdf, self.cdf_dir, shifts, schema=schema
+            )
+            ident_last = {c: ident_last[c] + shifts.get(c, 0) for c in ident_last}
+            # advance the plan baseline ONLY for the columns this append
+            # assigned — re-admitting an explicit BY DEFAULT column here
+            # would make a SECOND conflict shift the user-supplied values
+            ident_plan = {c: fresh_plan[c] for c in ident_plan}
+
+        # a blind append commutes with anything but a schema change
+        c = self._commit(
+            prev,
+            build,
+            Commute(
+                "append",
+                txn=(txn_app, txn_version),
+                same_schema=True,
+                rebase=shift_identity,
+            ),
+            new_files=new_files,
+            retries=retry_conflicts,
+        )
+        # None: our own replay won the race
+        return self.latest_version() if c is None else c.version
 
     # -- COPY INTO (idempotent bulk file ingestion) -------------------------
 
@@ -3291,8 +3385,7 @@ class VersionedTable:
         materialization. Only valid for SCALAR stats keys (copy_into,
         copy_into_registry, txn, identity, …), which the codec stores
         whole in every record; file_stats may be delta-encoded here."""
-        with open(self._commit_path(version)) as f:
-            return json.loads(f.read()).get("stats") or {}
+        return _raw_record(self.path, version).get("stats") or {}
 
     def _copy_into_loaded(self) -> set[str]:
         """Union of every COPY INTO commit's loaded-file identities.
@@ -3612,10 +3705,11 @@ class VersionedTable:
         conflicts loudly (its rows would be unmatched-by-source in a
         serial execution, so our rewrite is stale).
 
-        Concurrent writers: a version collision rebase-retries when the
-        conflicting commits provably commute with this merge (see
-        ``_commit_merge_with_rebase``); otherwise CommitConflictError
-        surfaces for the caller to re-run.
+        Concurrent writers: a version collision rebases when the
+        conflicting commits provably commute with this merge (its
+        ``Commute`` row: schema, identity and vectors unchanged, every
+        rewritten file still live, no added row matching its keys);
+        otherwise CommitConflictError surfaces for the caller to re-run.
         """
         prev = self.get_commit()
         if self._txn_skip(prev, txn_app, txn_version):
@@ -3978,171 +4072,68 @@ class VersionedTable:
         cdf_files = self._write_files(cdf_df, self.cdf_dir, schema=schema)
 
         src_keys = src.select(*keys).dropDuplicates(keys)
-        v, stats = self._commit_merge_with_rebase(
+        touched_set = set(touched)
+
+        def build(base: Commit) -> Commit:
+            # carryover is recomputed from the base, so a rebase keeps
+            # concurrent writers' files
+            carryover = [f for f in base.files if f not in touched_set]
+            stats = self._carry_stats(
+                base,
+                carryover,
+                {"touched_files": len(touched), "carryover_files": len(carryover)},
+            )
+            if ident_last:
+                stats["identity"] = dict(ident_last)
+            return Commit(
+                base.version + 1,
+                "merge",
+                carryover + new_files,
+                cdf_files,
+                schema.json(),
+                time.time(),
+                stats,
+                dv_files=list(base.dv_files),
+            )
+
+        def keys_hit(added: list[str]) -> bool:
+            # a serial execution would have merged these rows too
+            probe = self._read_files(added, prev.schema_json).alias("t")
+            cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
+            return bool(
+                probe.join(src_keys.alias("s"), cond, "left_semi")
+                .limit(1)
+                .count()
+            )
+
+        c = self._commit(
             prev,
-            touched,
-            new_files,
-            cdf_files,
-            schema,
-            src_keys,
-            keys,
-            txn_app,
-            txn_version,
-            nmbs_active=nmbs_active,
-            identity_stats=ident_last or None,
+            build,
+            Commute(
+                "merge",
+                txn=(txn_app, txn_version),
+                same_schema=True,
+                # inserted rows' ids are baked into the files
+                same_identity=bool(ident_last),
+                # a concurrent DV delete may mark rows this merge rewrote
+                same_dv=True,
+                guarded=frozenset(touched),
+                refuse_added=nmbs_active,
+                probe=keys_hit,
+                probe_what="merge's keys",
+            ),
+            new_files=new_files,
         )
         src.unpersist()
-        for c in ident_caches:
-            c.unpersist()
+        for cache in ident_caches:
+            cache.unpersist()
+        if c is None:
+            return {"version": self.latest_version(), "txn_skipped": True}
         return {
-            "version": v,
+            "version": c.version,
             "probe_candidate_files": len(probe_files),
-            **stats,
+            **c.stats,
         }
-
-    def _commit_merge_with_rebase(
-        self,
-        prev: Commit,
-        touched: list[str],
-        new_files: list[str],
-        cdf_files: list[str],
-        schema: T.StructType,
-        src_keys: DataFrame,
-        keys: list[str],
-        txn_app: str | None,
-        txn_version: int | None,
-        retry_conflicts: int = 5,
-        nmbs_active: bool = False,
-        identity_stats: dict | None = None,
-    ) -> tuple[int, dict]:
-        """Optimistic-concurrency resolution for merge (Delta VLDB'20
-        §3.2): on a version collision, re-read the new latest commit
-        and REBASE — re-publish the already-written rewrite on top of
-        the fresh snapshot — iff the concurrent commits provably
-        commute with this merge under the serialization "them first,
-        us second":
-
-        * every file this merge rewrote is still live in the fresh
-          snapshot (a concurrent writer removing one means write-write
-          overlap: lost update — raise);
-        * the table schema is unchanged (a concurrent evolution could
-          invalidate the rewrite's column set — raise);
-        * files the concurrent commits ADDED contain no rows matching
-          this merge's keys — checked exactly with a semi-join that
-          scans ONLY the added files (a match means a serial execution
-          would have merged those rows too: our rewrite is stale —
-          raise). Blind appends of foreign keys, merges/deletes on
-          disjoint keys, and compactions of untouched files all pass.
-
-        The rebase itself rewrites no data: carryover is recomputed
-        from the fresh snapshot (so concurrent writers' files survive)
-        and the commit record is re-published — same cost model as the
-        append retry above."""
-        touched_set = set(touched)
-        prev_files = set(prev.files)
-        base = prev
-        attempt = 0
-        while True:
-            carryover = [f for f in base.files if f not in touched_set]
-            extra = {
-                "touched_files": len(touched),
-                "carryover_files": len(carryover),
-            }
-            if base.version != prev.version:
-                extra["rebased_from_version"] = prev.version
-            stats = self._txn_record(
-                self._with_new_file_stats(
-                    self._carry_stats(base, carryover, extra),
-                    new_files,
-                    schema,
-                ),
-                base,
-                txn_app,
-                txn_version,
-            )
-            if identity_stats:
-                stats["identity"] = dict(identity_stats)
-            try:
-                self._write_commit(
-                    Commit(
-                        base.version + 1,
-                        "merge",
-                        carryover + new_files,
-                        cdf_files,
-                        schema.json(),
-                        time.time(),
-                        stats,
-                        dv_files=list(base.dv_files),
-                    )
-                )
-                return base.version + 1, stats
-            except CommitConflictError:
-                attempt += 1
-                if attempt > retry_conflicts:
-                    raise
-                fresh = self.get_commit()
-                if self._txn_skip(fresh, txn_app, txn_version):
-                    return fresh.version, {"txn_skipped": True}
-                if fresh.schema_json != prev.schema_json:
-                    raise CommitConflictError(
-                        "concurrent schema change during merge — re-run"
-                    ) from None
-                if identity_stats and (fresh.stats.get("identity") or {}) != (
-                    prev.stats.get("identity") or {}
-                ):
-                    # a concurrent commit consumed identity ids this
-                    # merge's inserted rows may collide with; the
-                    # rewrite is baked into files — re-run the merge
-                    raise CommitConflictError(
-                        "concurrent identity allocation during merge "
-                        "— re-run"
-                    ) from None
-                if list(fresh.dv_files) != list(prev.dv_files):
-                    # a concurrent DV delete may reference files this
-                    # merge rewrote — its deletions would silently
-                    # resurrect in our output. Conservative: conflict.
-                    raise CommitConflictError(
-                        "concurrent deletion-vector commit during merge "
-                        "— re-run"
-                    ) from None
-                overlap_files = touched_set - set(fresh.files)
-                if overlap_files:
-                    raise CommitConflictError(
-                        "concurrent writer removed file(s) this merge "
-                        f"rewrote ({sorted(overlap_files)[:3]}…) — "
-                        "write-write conflict, re-run"
-                    ) from None
-                added = [f for f in fresh.files if f not in prev_files]
-                if added and nmbs_active:
-                    # any concurrently-added row is by definition
-                    # unmatched-by-source in a serial re-execution of
-                    # this merge, so the by-source clause might have
-                    # deleted/updated it — our rewrite is stale.
-                    raise CommitConflictError(
-                        "concurrent commit added files during a merge "
-                        "with a NOT MATCHED BY SOURCE clause — re-run"
-                    ) from None
-                if added:
-                    probe = self._read_files(added, prev.schema_json).alias("t")
-                    hit = (
-                        probe.join(
-                            src_keys.alias("s"),
-                            [
-                                F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-                                for k in keys
-                            ],
-                            "left_semi",
-                        )
-                        .limit(1)
-                        .count()
-                    )
-                    if hit:
-                        raise CommitConflictError(
-                            "concurrent commit added rows matching this "
-                            "merge's keys — result would differ from a "
-                            "serial execution, re-run"
-                        ) from None
-                base = fresh
 
     def add_column(self, name: str, dtype: str) -> int:
         """Metadata-only ``ALTER TABLE ADD COLUMN``: commits a widened
@@ -4161,20 +4152,9 @@ class VersionedTable:
             schema = _with_field_ids(
                 schema, int(prev.stats.get("max_field_id", 0))
             )
-        v = prev.version + 1
-        self._write_commit(
-            Commit(
-                v,
-                "add_column",
-                prev.files,
-                [],
-                schema.json(),
-                time.time(),
-                self._carry_stats(prev, prev.files, {"added_column": name}),
-                dv_files=list(prev.dv_files),
-            )
+        return self._commit_metadata(
+            prev, "add_column", schema.json(), {"added_column": name}
         )
-        return v
 
     def rename_column(self, old: str, new: str) -> int:
         """Metadata-only ``ALTER TABLE RENAME COLUMN`` via column
@@ -4267,20 +4247,19 @@ class VersionedTable:
                 f: {(new if c == old else c): v for c, v in s.items()}
                 for f, s in stats["file_stats"].items()
             }
-        v = prev.version + 1
-        self._write_commit(
-            Commit(
-                v,
+        return self._commit(
+            prev,
+            lambda b: Commit(
+                b.version + 1,
                 "rename_column",
-                prev.files,
+                b.files,
                 [],
                 renamed.json(),
                 time.time(),
                 stats,
-                dv_files=list(prev.dv_files),
-            )
-        )
-        return v
+                dv_files=list(b.dv_files),
+            ),
+        ).version
 
     def drop_column(self, name: str) -> int:
         """Metadata-only ``ALTER TABLE DROP COLUMN``: the column leaves
@@ -4327,20 +4306,9 @@ class VersionedTable:
             # the DEFAULT dies with its column (defaults are
             # self-contained, so nothing else can reference it)
             self.drop_column_default(name)
-        v = prev.version + 1
-        self._write_commit(
-            Commit(
-                v,
-                "drop_column",
-                prev.files,
-                [],
-                kept.json(),
-                time.time(),
-                self._carry_stats(prev, prev.files, {"dropped_column": name}),
-                dv_files=list(prev.dv_files),
-            )
+        return self._commit_metadata(
+            prev, "drop_column", kept.json(), {"dropped_column": name}
         )
-        return v
 
     def widen_column_type(self, name: str, new_type) -> int:
         """Metadata-only ``ALTER TABLE ... ALTER COLUMN c TYPE <wider>``
@@ -4407,27 +4375,15 @@ class VersionedTable:
                 for f in schema.fields
             ]
         )
-        v = prev.version + 1
-        self._write_commit(
-            Commit(
-                v,
-                "widen_column",
-                prev.files,
-                [],
-                widened.json(),
-                time.time(),
-                self._carry_stats(
-                    prev,
-                    prev.files,
-                    {
-                        "widened_column": f"{name}: "
-                        f"{old_dt.simpleString()}->{new_dt.simpleString()}"
-                    },
-                ),
-                dv_files=list(prev.dv_files),
-            )
+        return self._commit_metadata(
+            prev,
+            "widen_column",
+            widened.json(),
+            {
+                "widened_column": f"{name}: "
+                f"{old_dt.simpleString()}->{new_dt.simpleString()}"
+            },
         )
-        return v
 
     def delete(self, condition: str, use_dv: bool = False) -> int:
         """Predicate DELETE — Delta ``DELETE FROM t WHERE ...`` parity
@@ -4484,7 +4440,7 @@ class VersionedTable:
         cdf_files = self._write_files(
             removed.withColumn(CHANGE_TYPE_COL, F.lit("delete")), self.cdf_dir
         )
-        return self._commit_cow_with_rebase(
+        return self._commit_cow(
             prev, touched, files[len(carryover):], cdf_files, "delete", condition
         )
 
@@ -4570,7 +4526,7 @@ class VersionedTable:
             )
         finally:
             matched.unpersist()
-        return self._commit_cow_with_rebase(
+        return self._commit_cow(
             prev,
             [],  # nothing rewritten: every file stays live
             [],
@@ -4583,7 +4539,7 @@ class VersionedTable:
             dv_counts_add=dv_counts,
         )
 
-    def _commit_cow_with_rebase(
+    def _commit_cow(
         self,
         prev: Commit,
         touched: list[str],
@@ -4593,113 +4549,68 @@ class VersionedTable:
         condition: str,
         schema_json: str | None = None,
         extra_stats: dict | None = None,
-        retry_conflicts: int = 5,
         dv_append: list[str] | None = None,
         dv_referenced: list[str] | None = None,
         identity_stats: dict | None = None,
         dv_counts_add: dict[str, int] | None = None,
     ) -> int:
-        """Optimistic concurrency for predicate copy-on-write ops
-        (delete/update/overwrite_where) and DV deletes — the same
-        commute law as the merge rebase: on a version collision,
-        re-publish the rewrite on top of the fresh snapshot iff (a) no
-        concurrent commit removed a file this op rewrote (write-write
-        overlap) — for a DV delete the "rewritten" set is the files its
-        vector REFERENCES (a concurrent rewrite of one would resurrect
-        our deletions), (b) the schema is unchanged, (c) the
-        concurrently-ADDED files contain no row matching the predicate
-        (a serial execution would have affected it) — checked with a
-        filter probe that scans ONLY the added files — and (d) no
-        concurrent commit changed the deletion vectors (our positions /
-        CDF images were computed against the old vector). Blind appends
-        of non-matching rows and disjoint-file writers all pass; the
-        probe cost is the concurrent delta, never the table. The
-        predicate-scoped reload racing the ingest stream is the
-        canonical case at 100 TB."""
-        pred = F.coalesce(F.expr(condition), F.lit(False))
+        """Commit a predicate copy-on-write op (delete/update/
+        overwrite_where) or a DV delete. Its commute row mirrors merge's
+        with the predicate as the added-files probe: a serial execution
+        would have affected any matching row a concurrent commit added.
+        For a DV delete the guarded set is the files its vector
+        REFERENCES (a concurrent rewrite of one would resurrect the
+        deletions). The predicate-scoped reload racing the ingest
+        stream is the canonical case at 100 TB."""
+        schema_json = schema_json or prev.schema_json
         touched_set = set(touched)
-        guard_set = touched_set | set(dv_referenced or [])
-        prev_files = set(prev.files)
-        base = prev
-        attempt = 0
-        while True:
+
+        def build(base: Commit) -> Commit:
             carryover = [f for f in base.files if f not in touched_set]
-            extra = {"touched_files": len(touched), **(extra_stats or {})}
-            if base.version != prev.version:
-                extra["rebased_from_version"] = prev.version
-            dv = list(base.dv_files) + list(dv_append or [])
-            cow_stats = self._with_new_file_stats(
-                self._carry_stats(base, carryover, extra),
-                new_files,
-                schema_json or prev.schema_json,
+            stats = self._carry_stats(
+                base, carryover, {"touched_files": len(touched), **(extra_stats or {})}
             )
             if identity_stats:
-                cow_stats["identity"] = dict(identity_stats)
+                stats["identity"] = dict(identity_stats)
             if dv_counts_add:
                 # new vector entries ADD to the carried live counts
                 # (entries are disjoint across DV files by
                 # construction — see _write_dv)
-                dvc = dict(cow_stats.get("dv_counts") or {})
+                dvc = dict(stats.get("dv_counts") or {})
                 for f, n in dv_counts_add.items():
                     dvc[f] = int(dvc.get(f, 0)) + int(n)
-                cow_stats["dv_counts"] = dvc
-            try:
-                self._write_commit(
-                    Commit(
-                        base.version + 1,
-                        op,
-                        carryover + new_files,
-                        cdf_files,
-                        schema_json or prev.schema_json,
-                        time.time(),
-                        cow_stats,
-                        dv_files=dv,
-                    )
-                )
-                return base.version + 1
-            except CommitConflictError:
-                attempt += 1
-                if attempt > retry_conflicts:
-                    raise
-                fresh = self.get_commit()
-                if fresh.schema_json != prev.schema_json:
-                    raise CommitConflictError(
-                        f"concurrent schema change during {op} — re-run"
-                    ) from None
-                if identity_stats and (fresh.stats.get("identity") or {}) != (
-                    prev.stats.get("identity") or {}
-                ):
-                    # ids this op assigned may collide with the
-                    # concurrent winner's — re-run to re-assign
-                    raise CommitConflictError(
-                        f"concurrent identity allocation during {op} "
-                        "— re-run"
-                    ) from None
-                if list(fresh.dv_files) != list(prev.dv_files):
-                    raise CommitConflictError(
-                        f"concurrent deletion-vector commit during {op} "
-                        "— re-run"
-                    ) from None
-                overlap = guard_set - set(fresh.files)
-                if overlap:
-                    raise CommitConflictError(
-                        f"concurrent writer removed file(s) this {op} "
-                        f"depends on ({sorted(overlap)[:3]}…) — "
-                        "write-write conflict, re-run"
-                    ) from None
-                added = [f for f in fresh.files if f not in prev_files]
-                if added and (
+                stats["dv_counts"] = dvc
+            return Commit(
+                base.version + 1,
+                op,
+                carryover + new_files,
+                cdf_files,
+                schema_json,
+                time.time(),
+                stats,
+                dv_files=list(base.dv_files) + list(dv_append or []),
+            )
+
+        pred = F.coalesce(F.expr(condition), F.lit(False))
+        return self._commit(
+            prev,
+            build,
+            Commute(
+                op,
+                same_schema=True,
+                same_identity=bool(identity_stats),
+                same_dv=True,
+                guarded=frozenset(touched_set | set(dv_referenced or [])),
+                probe=lambda added: bool(
                     self._read_files(added, prev.schema_json)
                     .filter(pred)
                     .limit(1)
                     .count()
-                ):
-                    raise CommitConflictError(
-                        f"concurrent commit added rows matching this "
-                        f"{op}'s predicate — result would differ from a "
-                        "serial execution, re-run"
-                    ) from None
-                base = fresh
+                ),
+                probe_what=f"{op}'s predicate",
+            ),
+            new_files=new_files,
+        ).version
 
     def update(self, condition: str, assignments: dict[str, F.Column]) -> int:
         """Conditional UPDATE — the reference's CloseWatermark proc (O28,
@@ -4779,7 +4690,7 @@ class VersionedTable:
             ),
             self.cdf_dir,
         )
-        return self._commit_cow_with_rebase(
+        return self._commit_cow(
             prev, touched, new_files, cdf_files, "update", condition
         )
 
@@ -4960,19 +4871,11 @@ class VersionedTable:
         # output — surface it; re-running compaction is cheap relative to
         # silently resurrecting rewritten rows. At 100 TB this matters:
         # compaction runs long and WILL collide with the ingest stream.
-        prev_files_set = set(prev.files)
         # full compaction replaces every prev file; incremental dooms
         # only the rewritten subset — right-sized files carry through
-        doomed = rewrite_set if rewrite_set is not None else prev_files_set
-        base = prev
-        attempt = 0
-        # new_files never changes across OCC retries, so harvest their
-        # footers/bloom sidecars ONCE per schema (a rebase onto a
-        # concurrent metadata commit can change schema_json, which the
-        # harvest keys stat extraction on — recompute only then).
-        harvested: dict = {}
-        harvest_schema: str | None = None
-        while True:
+        doomed = rewrite_set if rewrite_set is not None else set(prev.files)
+
+        def build(base: Commit) -> Commit:
             files = new_files + [f for f in base.files if f not in doomed]
             stats: dict = {
                 "files_before": len(prev.files),
@@ -4982,33 +4885,22 @@ class VersionedTable:
             if rewrite_set is not None:
                 stats["files_rewritten"] = len(rewrite_set)
                 stats["files_kept"] = len(files) - len(new_files)
-            # footer-harvest min/max (+ bloom sidecars when configured —
-            # this is how "enable the property, then OPTIMIZE" indexes
-            # existing data) for every packed file; the exact
-            # scan-collected cluster stats overlay per column
-            if harvest_schema != base.schema_json:
-                harvested = dict(
-                    self._with_new_file_stats(
-                        {}, new_files, base.schema_json
-                    ).get("file_stats", {})
-                )
-                harvest_schema = base.schema_json
-            fstats = dict(harvested)
-            for f, s in packed_stats.items():
-                fstats[f] = {**fstats.get(f, {}), **s}
+            # carried files keep their stats; the packed files' exact
+            # scan-collected cluster stats overlay the footer harvest
+            # (+ bloom sidecars when configured — this is how "enable
+            # the property, then OPTIMIZE" indexes existing data)
             base_fstats = base.stats.get("file_stats", {})
+            fstats = dict(packed_stats)
             for f in files:
                 if f not in fstats and f in base_fstats:
                     fstats[f] = base_fstats[f]
             if fstats:
                 stats["file_stats"] = fstats
-            if base.stats.get("txn"):
-                stats["txn"] = dict(base.stats["txn"])
             # a WHERE-scoped compact carries the vectors, so the live
             # DV counts follow the surviving files (entries for
             # rewritten files die with them — their deletions are now
             # materialized); unscoped modes drop dv_files and
-            # _write_commit clears the counts
+            # prepare_commit clears the counts
             if where and base.stats.get("dv_counts"):
                 live = set(files)
                 dvc = {
@@ -5018,48 +4910,39 @@ class VersionedTable:
                 }
                 if dvc:
                     stats["dv_counts"] = dvc
-            if base.version != prev.version:
-                stats["rebased_from_version"] = prev.version
-            try:
-                self._write_commit(
-                    Commit(
-                        base.version + 1,
-                        "compact",
-                        files,
-                        [],
-                        base.schema_json,
-                        time.time(),
-                        stats,
-                        # unscoped/incremental modes rewrite every
-                        # DV-referenced file, so the vectors are spent;
-                        # a WHERE-scoped compact may keep DV'd files
-                        # outside its range — vectors carry (entries
-                        # for rewritten files go stale harmlessly)
-                        dv_files=list(base.dv_files) if where else [],
-                    )
-                )
-                return base.version + 1
-            except CommitConflictError:
-                attempt += 1
-                if attempt > 5:
-                    raise
-                fresh = self.get_commit()
-                removed = doomed - set(fresh.files)
-                if removed:
-                    raise CommitConflictError(
-                        "concurrent writer rewrote/removed file(s) this "
-                        f"compaction packed ({sorted(removed)[:3]}…) — "
-                        "re-run compaction on the fresh snapshot"
-                    ) from None
-                if list(fresh.dv_files) != list(prev.dv_files):
-                    # a concurrent DV delete marked rows in files this
-                    # compaction already packed WITHOUT those deletions —
-                    # committing would resurrect them
-                    raise CommitConflictError(
-                        "concurrent deletion-vector commit during "
-                        "compaction — re-run on the fresh snapshot"
-                    ) from None
-                base = fresh
+            return Commit(
+                base.version + 1,
+                "compact",
+                files,
+                [],
+                base.schema_json,
+                time.time(),
+                stats,
+                # unscoped/incremental modes rewrite every DV-referenced
+                # file, so the vectors are spent; a WHERE-scoped compact
+                # may keep DV'd files outside its range — vectors carry
+                # (entries for rewritten files go stale harmlessly)
+                dv_files=list(base.dv_files) if where else [],
+            )
+
+        # Optimistic concurrency: compaction is a pure reorganization, so
+        # it COMMUTES with any concurrent commit that only ADDED files
+        # (appends, insert-only merges) or only changed metadata
+        # (add/drop/rename column) — rebase re-publishes the packed files
+        # beside the concurrently-added ones under the fresh schema. A
+        # concurrent writer that REMOVED one of the compacted input files
+        # (merge/delete/overwrite rewrote it) invalidates the packed
+        # output, and a concurrent DV delete marked rows it packed
+        # without those deletions — surface either; re-running
+        # compaction is cheap relative to silently resurrecting rows. At
+        # 100 TB this matters: compaction runs long and WILL collide
+        # with the ingest stream.
+        return self._commit(
+            prev,
+            build,
+            Commute("compaction", same_dv=True, guarded=frozenset(doomed)),
+            new_files=new_files,
+        ).version
 
     def _dead_column_files(self, c: Commit) -> set[str]:
         """Files whose parquet footers still carry columns the logical
@@ -5160,12 +5043,10 @@ class VersionedTable:
                 os.remove(f)
         new_files = kept_new
         doomed = set(candidates)
-        base = prev
-        attempt = 0
-        harvested: dict = {}
-        harvest_schema: str | None = None
-        while True:
+
+        def build(base: Commit) -> Commit:
             files = new_files + [f for f in base.files if f not in doomed]
+            base_fstats = base.stats.get("file_stats", {})
             stats: dict = {
                 "files_purged": len(candidates),
                 "files_after": len(new_files),
@@ -5173,61 +5054,29 @@ class VersionedTable:
                 "dead_column_files": len(dead),
                 "bytes": total,
             }
-            if harvest_schema != base.schema_json and new_files:
-                harvested = dict(
-                    self._with_new_file_stats(
-                        {}, new_files, base.schema_json
-                    ).get("file_stats", {})
-                )
-                harvest_schema = base.schema_json
-            fstats = dict(harvested)
-            base_fstats = base.stats.get("file_stats", {})
-            for f in files:
-                if f not in fstats and f in base_fstats:
-                    fstats[f] = base_fstats[f]
+            fstats = {f: base_fstats[f] for f in files if f in base_fstats}
             if fstats:
                 stats["file_stats"] = fstats
-            if base.stats.get("txn"):
-                stats["txn"] = dict(base.stats["txn"])
-            if base.version != prev.version:
-                stats["rebased_from_version"] = prev.version
-            try:
-                self._write_commit(
-                    Commit(
-                        base.version + 1,
-                        "reorg_purge",
-                        files,
-                        [],
-                        base.schema_json,
-                        time.time(),
-                        stats,
-                        # every DV-referenced live file was rewritten
-                        # with its deletions applied — vectors spent
-                        # (entries for already-gone files were stale)
-                        dv_files=[],
-                    )
-                )
-                return base.version + 1
-            except CommitConflictError:
-                attempt += 1
-                if attempt > 5:
-                    raise
-                fresh = self.get_commit()
-                removed = doomed - set(fresh.files)
-                if removed:
-                    raise CommitConflictError(
-                        "concurrent writer rewrote/removed file(s) this "
-                        f"purge rewrote ({sorted(removed)[:3]}…) — "
-                        "re-run REORG on the fresh snapshot"
-                    ) from None
-                if list(fresh.dv_files) != list(prev.dv_files):
-                    # new vectors may mark rows in files this purge
-                    # already rewrote without those deletions
-                    raise CommitConflictError(
-                        "concurrent deletion-vector commit during "
-                        "REORG PURGE — re-run on the fresh snapshot"
-                    ) from None
-                base = fresh
+            return Commit(
+                base.version + 1,
+                "reorg_purge",
+                files,
+                [],
+                base.schema_json,
+                time.time(),
+                stats,
+                # every DV-referenced live file was rewritten with its
+                # deletions applied — vectors spent (entries for
+                # already-gone files were stale)
+                dv_files=[],
+            )
+
+        return self._commit(
+            prev,
+            build,
+            Commute("REORG PURGE", same_dv=True, guarded=frozenset(doomed)),
+            new_files=new_files,
+        ).version
 
     # -- data skipping (Delta file-stats analog) ---------------------------
 

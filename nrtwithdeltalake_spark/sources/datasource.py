@@ -69,19 +69,24 @@ def _strip_field_ids(schema: T.StructType) -> T.StructType:
     return T.StructType(fields)
 
 
+def _refuse_unmaintained(path: str, instead: str) -> None:
+    """Refuse a table whose declared invariants these writers cannot
+    maintain: every writer feature the shared record builder says the
+    table requires (``tables.required_writer_features``) — CHECK / NOT
+    NULL enforcement, generated and DEFAULT values and identity
+    allocation all need a SparkSession-side validation or rewrite.
+    (They do maintain every reader feature: the builder stamps those.)
+    """
+    from ..pipeline.tables import required_writer_features
 
-def _sidecar_active(path: str, name: str) -> bool:
-    """True when the sidecar file exists AND binds anything — dropping
-    the last constraint/generated column leaves an empty '{}' file,
-    which must not keep refusing format writes. Unparseable → refuse
-    conservatively."""
-    try:
-        with open(os.path.join(path, name)) as f:
-            return bool(json.load(f))
-    except FileNotFoundError:
-        return False
-    except ValueError:
-        return True
+    bad = required_writer_features(path)
+    if bad:
+        raise ValueError(
+            f"format('versioned') writers cannot maintain writer "
+            f"feature(s) {sorted(bad)} — CHECK constraints, generated/"
+            f"identity columns and column DEFAULTs are enforced only by "
+            f"the native writer; {instead}"
+        )
 
 
 def _log_dir(path: str) -> str:
@@ -764,65 +769,14 @@ def _write_task_files(path: str, iterator, field_ids: dict[str, int]) -> _WriteR
 
 
 def _publish_record(path: str, record: dict) -> None:
-    """Driver-side commit publish — delegates to the SAME os.link-based
-    put-if-absent helper the native ``VersionedTable`` uses
-    (``pipeline.tables.publish_commit_file``), so a DataSource writer
-    racing a native writer can never silently clobber the other's
-    commit: exactly one wins the link, the loser gets
-    ``CommitConflictError``. (A bare exists-check + rename — the old
-    code here — loses a commit on POSIX, where rename overwrites.)"""
-    from ..pipeline.tables import check_write_protocol, publish_commit_file
+    """Driver-side commit publish through the SAME record builder and
+    put-if-absent helper as the native ``VersionedTable``
+    (``pipeline.tables.publish_commit``): protocol, in-commit timestamp
+    and high-water marks are stamped identically, and a writer racing
+    another gets ``CommitConflictError`` — never a clobbered commit."""
+    from ..pipeline.tables import Commit, publish_commit
 
-    if record["version"] > 0:
-        # writer protocol gate + monotone feature carry, mirroring the
-        # native _write_commit: refuse to build on a snapshot whose
-        # features we can't maintain; re-advertise them all (plus
-        # deletion vectors if this commit still carries sidecars —
-        # overwrite spends them but the upgrade is permanent, so carry
-        # keeps the stamp). Constraints/generated columns never reach
-        # here — both DataSource writers refuse those tables up front.
-        prev_raw = _raw_commit(path, record["version"] - 1)
-        check_write_protocol(prev_raw, where=f"{path}: ")
-        # monotone in-commit timestamps, same clamp as the native layer
-        record["ts"] = max(
-            float(record.get("ts", 0.0)), float(prev_raw.get("ts", 0.0)) + 1e-3
-        )
-        p = prev_raw.get("protocol") or {}
-        rf = set(p.get("reader_features") or [])
-        wf = set(p.get("writer_features") or [])
-        if record.get("dv_files"):
-            rf.add("deletion_vectors")
-        wf |= rf
-        if rf or wf:
-            record["protocol"] = {
-                "min_reader": 2 if rf else 1,
-                "min_writer": 2,
-                "reader_features": sorted(rf),
-                "writer_features": sorted(wf),
-            }
-    # re-stamp the field-id high-water mark (schema ids ∨ carried value),
-    # same as the native _write_commit — keeps dropped ids retired
-    ids = [
-        int(f.metadata[FIELD_ID_KEY])
-        for f in T.StructType.fromJson(json.loads(record["schema_json"])).fields
-        if f.metadata and FIELD_ID_KEY in f.metadata
-    ]
-    m = max(
-        max(ids, default=0), int(record.get("stats", {}).get("max_field_id", 0))
-    )
-    if m:
-        record.setdefault("stats", {})["max_field_id"] = m
-    from ..pipeline import logcodec
-
-    parent = None
-    if record["version"] > 0 and record["version"] % logcodec.CHECKPOINT_EVERY:
-        # checkpoint versions store full lists — skip the parent walk
-        try:
-            parent = _commit(path, record["version"] - 1)
-        except FileNotFoundError:
-            parent = None
-    payload = logcodec.encode(record, parent)
-    publish_commit_file(_log_dir(path), record["version"], json.dumps(payload))
+    publish_commit(path, Commit(**record))
 
 
 def _check_type_compat(
@@ -895,24 +849,6 @@ def _check_type_compat(
     return T.StructType(list(prev_schema.fields) + added)
 
 
-def _fresh_field_ids(schema: T.StructType, floor: int = 0) -> T.StructType:
-    """Assign a fresh field id to every field lacking one — the format
-    writer's mirror of the native ``_with_field_ids``
-    (``pipeline/tables.py:167``): format-created tables are id-mapped
-    from birth, so ``rename_column`` works on them exactly as on
-    natively created tables."""
-    have = [i for i in _ids_of(schema).values()]
-    nxt = max(max(have, default=0), floor) + 1
-    fields = []
-    for f in schema.fields:
-        md = dict(f.metadata or {})
-        if FIELD_ID_KEY not in md:
-            md[FIELD_ID_KEY] = nxt
-            nxt += 1
-        fields.append(T.StructField(f.name, f.dataType, f.nullable, md))
-    return T.StructType(fields)
-
-
 def _overwrite_schema(
     prev_schema: T.StructType, new_schema: T.StructType, id_floor: int
 ) -> T.StructType:
@@ -933,7 +869,9 @@ def _overwrite_schema(
             if FIELD_ID_KEY in p.metadata:
                 md[FIELD_ID_KEY] = int(p.metadata[FIELD_ID_KEY])
         carried.append(T.StructField(f.name, f.dataType, f.nullable, md))
-    return _fresh_field_ids(T.StructType(carried), id_floor)
+    from ..pipeline.tables import _with_field_ids
+
+    return _with_field_ids(T.StructType(carried), id_floor)
 
 
 def _plan_commit_schema(
@@ -950,7 +888,9 @@ def _plan_commit_schema(
     except (FileNotFoundError, OSError):
         vs = []
     if not vs:
-        return _fresh_field_ids(new_schema)
+        from ..pipeline.tables import _with_field_ids
+
+        return _with_field_ids(new_schema)  # id-mapped from birth
     prev = _commit(path, vs[-1])
     prev_schema = T.StructType.fromJson(json.loads(prev["schema_json"]))
     floor = int(prev.get("stats", {}).get("max_field_id", 0))
@@ -983,8 +923,10 @@ class _VersionedWriter(DataSourceArrowWriter):
     * ``abort()`` deletes whatever the failed attempt wrote.
 
     Refused (use the native ``VersionedTable`` API, which holds a
-    SparkSession): tables with CHECK constraints (enforcement needs a
-    validation scan) and registered tables (the catalog sync needs DDL).
+    SparkSession): tables declaring CHECK / NOT NULL constraints,
+    generated, identity or DEFAULT columns (``_refuse_unmaintained``)
+    and registered tables (the catalog sync needs DDL). Commits do not
+    retry: a lost version race raises ``CommitConflictError``.
     ``mode("overwrite")`` emits delete pre-images for the previous
     snapshot to the change feed — converted file-by-file on the driver
     via pyarrow (delta-sized driver IO; the JVM-path ``overwrite()``
@@ -998,16 +940,7 @@ class _VersionedWriter(DataSourceArrowWriter):
         # the TARGET table's commit schema defines (_stamp_field_ids)
         self.schema_json = _strip_field_ids(schema).json()
         self.overwrite = overwrite
-        if _sidecar_active(self.path, "_constraints.json"):
-            raise ValueError(
-                "format('versioned') write path cannot enforce CHECK "
-                "constraints; use VersionedTable.append/overwrite"
-            )
-        if _sidecar_active(self.path, "_generated.json"):
-            raise ValueError(
-                "format('versioned') write path cannot compute/validate "
-                "generated columns; use VersionedTable.append/overwrite"
-            )
+        _refuse_unmaintained(self.path, "use VersionedTable.append/overwrite")
         if os.path.exists(os.path.join(self.path, "_registration.json")):
             raise ValueError(
                 "table is catalog-registered; the registration sync needs "
@@ -1192,8 +1125,6 @@ class _VersionedWriter(DataSourceArrowWriter):
                 stats["file_stats"] = kept
         if prev.get("stats", {}).get("txn"):
             stats["txn"] = dict(prev["stats"]["txn"])
-        if prev.get("stats", {}).get("max_field_id"):
-            stats["max_field_id"] = prev["stats"]["max_field_id"]
         _publish_record(
             self.path,
             {
@@ -1232,16 +1163,7 @@ class _VersionedStreamWriter(DataSourceStreamArrowWriter):
     def __init__(self, path: str, schema: T.StructType):
         self.path = os.path.abspath(path)
         self.schema_json = _strip_field_ids(schema).json()  # see batch writer
-        if _sidecar_active(self.path, "_constraints.json"):
-            raise ValueError(
-                "format('versioned') stream sink cannot enforce CHECK "
-                "constraints; use foreachBatch + VersionedTable"
-            )
-        if _sidecar_active(self.path, "_generated.json"):
-            raise ValueError(
-                "format('versioned') stream sink cannot compute/validate "
-                "generated columns; use foreachBatch + VersionedTable"
-            )
+        _refuse_unmaintained(self.path, "use foreachBatch + VersionedTable")
         if os.path.exists(os.path.join(self.path, "_registration.json")):
             raise ValueError(
                 "table is catalog-registered; use foreachBatch + VersionedTable"
@@ -1300,8 +1222,6 @@ class _VersionedStreamWriter(DataSourceStreamArrowWriter):
             return
         stats: dict = {"txn": dict(prev.get("stats", {}).get("txn") or {})}
         stats["txn"][_STREAM_TXN_APP] = batchId
-        if prev.get("stats", {}).get("max_field_id"):
-            stats["max_field_id"] = prev["stats"]["max_field_id"]
         kept = {
             f: s
             for f, s in (prev.get("stats", {}).get("file_stats") or {}).items()
